@@ -1076,9 +1076,11 @@ def deterministic_walks(
 
         1 + (v * 31 + i) mod outdeg(v)
 
-    where neighbors are ranked 1..outdeg(v) by destination id.  A walk
-    ending on a node with no out-edges stops early.  Returns one row
-    per visited position: (walk, step, node) with step 0 at the seed.
+    where neighbors are ranked 1..outdeg(v) by destination id and ``mod``
+    is the non-negative residue (``pmod``), so negative node ids pick a
+    rank in range too.  A walk ending on a node with no out-edges stops
+    early.  Returns one row per visited position: (walk, step, node)
+    with step 0 at the seed.
 
     The modular-congruential choice replaces the usual RNG (which would
     be partition-order dependent and un-replayable); embedding trainers
@@ -1113,7 +1115,9 @@ def deterministic_walks(
     )
     out = cur
     for i in range(1, walk_length + 1):
-        pick = 1 + (F.col("s") * 31 + F.lit(i)) % F.col("od")
+        # Spark's % keeps the dividend's sign: a negative id would give
+        # rank <= 0, match no neighbor and end the walk silently
+        pick = 1 + F.pmod(F.col("s") * 31 + F.lit(i), F.col("od"))
         cur = (
             cur.withColumnRenamed("node", "s")
             .join(nbrs, "s")

@@ -11,11 +11,14 @@ Pipeline per variable and unordered dataset pair:
      characters (``s[0:2], s[1:3], s[2:4]``) — any single edit in the
      prefix still shares a gram, recall measured in tests; ``block="cross"``
      gives the exact cartesian for golden verification.
-  3. scoring: per-bucket quadratic join + JW executed inside DuckDB (C++)
-     via applyInPandas — candidates never leave the task; oversized
-     buckets are salted into a triangle join (see _score_buckets_duckdb).
-     Exact-semantics fallback: Arrow-batched vectorized numpy JW
-     (functions/jw.py) over materialized candidate pairs.
+  3. scoring: the blocking buckets are hash-partitioned across Spark
+     tasks; each task scores all of its buckets with one DuckDB (C++)
+     self-join + JW over its gathered Arrow batches (mapInArrow) —
+     candidates never leave the task; oversized buckets are salted into a
+     triangle join (see _score_buckets_duckdb). Pairs touching a
+     non-ASCII string are scored in the same task by the exact codepoint
+     kernel (functions/jw.py). Exact-semantics fallback: Arrow-batched
+     vectorized numpy JW over materialized candidate pairs.
   4. per-direction argmax with **ties kept** (`maxValue`,
      `JaroWinklerMappingProcessor.java:112-127`): ``rank() == 1`` over a
      window — rank, not row_number.
@@ -68,7 +71,17 @@ def _score_buckets_duckdb(
     triangle join*: rows get salt s ∈ [0, k), k = ceil(n/cap), and task
     (i, j≥i) scores exactly the cross pairs of salt groups i and j — every
     pair covered once, per-task work ≤ cap², replication factor k on the
-    (tiny) string rows instead of a single k²·cap²-pair straggler."""
+    (tiny) string rows instead of a single k²·cap²-pair straggler.
+
+    Execution: the salted rows are hash-partitioned on (variable, bk,
+    ti, tj), so every bucket task lands whole in one Spark task. Each
+    Spark task gathers its Arrow batches into one table and scores all of
+    its bucket tasks with ONE DuckDB self-join keyed on those four
+    columns; the diagonal/off-diagonal distinction of the triangle is
+    the per-row predicate ``a._ti = a._tj OR a._s <> b._s``. Python and
+    DuckDB start once per Spark task, not once per bucket: the fixed
+    cost of a call (a connection, Arrow conversion) would otherwise
+    dominate the many small buckets."""
 
     cnt = keyed.groupBy("variable", "bk").agg(F.count("*").alias("_n"))
     k = F.greatest(F.ceil(F.col("_n") / bucket_cap), F.lit(1)).cast("int")
@@ -95,65 +108,71 @@ def _score_buckets_duckdb(
             F.col("_t.ti").alias("_ti"), F.col("_t.tj").alias("_tj"),
         )
     )
+    parts = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    def score(pdf):
+    def score(batches):
         import duckdb
-        import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         from ..functions.jw import jaro_winkler_batch
 
-        empty = pd.DataFrame(
-            {c: pd.Series(dtype="float64" if c == "score" else "object")
-             for c in ("d1", "variable", "v1", "d2", "v2", "score")}
-        )
-        same = bool(pdf["_ti"].iat[0] == pdf["_tj"].iat[0])
-        cross = "" if same else "AND a._s <> b._s"
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
         # DuckDB's JW walks UTF-8 bytes; pairs touching a non-ASCII string
         # are joined/length-pruned in DuckDB but scored by the exact
         # codepoint kernel
-        pdf = pdf.assign(_ascii=~pdf["value"].str.contains(r"[^\x00-\x7f]", regex=True))
-        join_cond = f"""
+        ascii_ = pc.equal(pc.binary_length(t["value"]), pc.utf8_length(t["value"]))
+        t = t.append_column("_ascii", ascii_)
+        out_schema = pa.schema(
+            [(c, pa.string()) for c in ("d1", "variable", "v1", "d2", "v2")]
+            + [("score", pa.float64())]
+        )
+        pairs = """
+            SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
+                   b.dataset AS d2, b.value AS v2
               FROM t a JOIN t b
-                ON a.dataset < b.dataset {cross}
+                ON a.variable = b.variable AND a.bk = b.bk
+               AND a._ti = b._ti AND a._tj = b._tj
+               AND a.dataset < b.dataset
+               AND (a._ti = a._tj OR a._s <> b._s)
                AND least(length(a.value), length(b.value))
                    >= ? * greatest(length(a.value), length(b.value))
         """
-        con = duckdb.connect()
-        con.execute("SET threads=1")
-        con.register("t", pdf)
-        out = con.execute(
-            f"""
-            SELECT d1, variable, v1, d2, v2, score FROM (
-              SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
-                     b.dataset AS d2, b.value AS v2,
-                     CASE WHEN a.value = b.value THEN 1.0
-                          ELSE jaro_winkler_similarity(a.value, b.value)
-                     END AS score
-              {join_cond} AND a._ascii AND b._ascii
-            ) WHERE score >= ?
-            """,
-            [r_min, threshold],
-        ).df()
-        if not pdf["_ascii"].all():
-            cand = con.execute(
+        with duckdb.connect() as con:
+            con.execute("SET threads=1")
+            con.register("t", t)
+            out = con.execute(
                 f"""
-                SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
-                       b.dataset AS d2, b.value AS v2
-                {join_cond} AND NOT (a._ascii AND b._ascii)
+                SELECT * FROM (
+                  SELECT d1, variable, v1, d2, v2,
+                         CASE WHEN v1 = v2 THEN 1.0
+                              ELSE jaro_winkler_similarity(v1, v2)
+                         END::DOUBLE AS score
+                    FROM ({pairs} AND a._ascii AND b._ascii)
+                ) WHERE score >= ?
                 """,
-                [r_min],
-            ).df()
-            if len(cand):
-                s = jaro_winkler_batch(cand["v1"], cand["v2"])
-                cand = cand.assign(score=s)[np.asarray(s) >= threshold]
-                out = pd.concat([out, cand], ignore_index=True)
-        con.close()
-        return out if len(out) else empty
+                [r_min, threshold],
+            ).fetch_arrow_table().cast(out_schema)
+            if not pc.all(ascii_).as_py():
+                cand = con.execute(
+                    f"{pairs} AND NOT (a._ascii AND b._ascii)", [r_min]
+                ).fetch_arrow_table()
+                if cand.num_rows:
+                    s = pa.array(jaro_winkler_batch(
+                        cand["v1"].to_pandas(), cand["v2"].to_pandas()
+                    ), pa.float64())
+                    cand = cand.append_column("score", s).filter(
+                        pc.greater_equal(s, threshold)
+                    )
+                    out = pa.concat_tables([out, cand.cast(out_schema)])
+        yield from out.to_batches()
 
     return (
-        exploded.groupBy("variable", "bk", "_ti", "_tj")
-        .applyInPandas(score, _SCORED_SCHEMA)
+        exploded.repartition(parts, "variable", "bk", "_ti", "_tj")
+        .mapInArrow(score, _SCORED_SCHEMA)
         .dropDuplicates(["d1", "d2", "variable", "v1", "v2"])
     )
 

@@ -2,9 +2,13 @@
 graph-store mutation half of the query surface (W3C SPARQL 1.1 Update
 §3).
 
-The reference executes updates through Jena's ``UpdateAction`` wherever
-a processor rewrites its model; here an update is a *pure function* on
-the distributed relation — each operation compiles to anti-joins
+The reference does not execute SPARQL Update: its processors change
+their models through the Jena Model API (adding and removing
+statements).  Update is surface beyond the reference — the natural way
+for a knowledge-graph pipeline to apply a curated fix or a rule-derived
+delta to the triples it already built — so this implements the SPARQL
+1.1 Update subset below.  An update is a *pure function* on the
+distributed relation — each operation compiles to anti-joins
 (delete) and unions (insert) and the updated DataFrame is returned,
 which is the shape a Spark pipeline wants (the store write is the
 caller's sink, e.g. an Iceberg MERGE at deployment).

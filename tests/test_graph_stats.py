@@ -647,6 +647,30 @@ def test_deterministic_walks_replay_identical(spark):
     assert a == b and len(a) == 15
 
 
+def test_deterministic_walks_negative_ids_reach_full_length(spark):
+    # a 5-node ring of negative ids where every node has two out-edges:
+    # no sink, so every walk must run all walk_length steps (a signed %
+    # would give rank <= 0 for most steps and end the walk early)
+    from abecto_spark.operators.graph_stats import deterministic_walks
+
+    ids = [-1, -2, -3, -4, -5]
+    e = spark.createDataFrame(
+        [(v, ids[(k + 1) % 5]) for k, v in enumerate(ids)]
+        + [(v, ids[(k + 2) % 5]) for k, v in enumerate(ids)],
+        "src bigint, dst bigint",
+    )
+    seeds = spark.createDataFrame([(v,) for v in ids], "node bigint")
+    rows = deterministic_walks(e, seeds, walk_length=6).collect()
+    steps = {}
+    for r in rows:
+        steps.setdefault(r["walk"], []).append(r["step"])
+    assert sorted(steps) == sorted(ids)
+    assert all(sorted(s) == list(range(7)) for s in steps.values())
+    # step 1 from -1: pick = 1 + pmod(-31 + 1, 2) = 1 -> smaller dst, -3
+    first = {(r["walk"], r["node"]) for r in rows if r["step"] == 1}
+    assert (-1, -3) in first
+
+
 def test_deterministic_walks_string_ids_are_loud(spark):
     from abecto_spark.operators.graph_stats import (
         GraphStatsError,
